@@ -65,10 +65,16 @@ object CpcDimSources {
     * `<classification-symbol>` elements in `CPCSchemeXML{v}.zip`
     * (validator.py:137-174). DOM-parsed per member on executors; emission
     * order is the reference's depth-first traversal so keep-last reproduces
-    * its dict-overwrite behavior. Returns (symbol, parent_symbol). */
+    * its dict-overwrite behavior. Returns (symbol, parent_symbol).
+    *
+    * SCALE: the archive decodes in one task, but a bulk release ships one
+    * member per subclass (thousands), so the member payloads are spread over
+    * the session's cores before the DOM parse. keepLast orders explicitly by
+    * (memberIdx, lineNo), so the result does not depend on that layout. */
   def schemeEdges(spark: SparkSession, zipPath: String): DataFrame = {
     import spark.implicits._
     val edges = ZipTextSource.members(spark, zipPath, _.endsWith(".xml"))
+      .repartition(spark.sparkContext.defaultParallelism)
       .flatMap { m =>
         val doc = DocumentBuilderFactory.newInstance().newDocumentBuilder()
           .parse(new java.io.ByteArrayInputStream(m.content))

@@ -21,12 +21,14 @@ case class ZipMember(file: String, member: String, memberIdx: Int, content: Arra
   * same single-threaded (reference: src/cpc_etl/parser.py:78-93,
   * validator.py:77-150).
   *
-  * SCALE: one task per zip archive (zips are not splittable). Bulk-release
-  * corpora ship as many archives, so parallelism = archive count, which is the
-  * right axis; for pathological single multi-GB zips, land-and-explode to text
-  * first, then `spark.read.text` gives split-level parallelism. Member bytes
-  * are streamed through ZipInputStream — only one member is buffered at a
-  * time, and only when `members` (XML) is used.
+  * SCALE: decoding is one task per zip archive (zips are not splittable), so
+  * decode parallelism = archive count; for pathological single multi-GB zips,
+  * land-and-explode to text first, then `spark.read.text` gives split-level
+  * parallelism. Member bytes are streamed through ZipInputStream — only one
+  * member is buffered at a time, and only when `members` (XML) is used. Work
+  * per member after the decode need not stay on that one task: callers may
+  * repartition the members (the CPC scheme parse does, see
+  * [[CpcDimSources.schemeEdges]]).
   */
 object ZipTextSource {
 

@@ -90,6 +90,41 @@ object CpcFixtures {
     zip(dir, s"CPCSchemeXML$Version.zip", Seq(
       s"cpc-scheme-$Version.xml" -> schemeXml))
 
+  /** Three scheme members in zip order. `A01B 1/02` hangs under `A01B 1/00`
+    * in the first member and under `A01B` in the third, so keep-last must
+    * report the third member's parent; `A01B 1/00` appears under `A01B` in
+    * both the first and the second member. */
+  val multiMemberScheme: Seq[(String, String)] = Seq(
+    "cpc-scheme-A01B.xml" ->
+      """<class-scheme>
+        |  <classification-item><classification-symbol>A01B</classification-symbol>
+        |    <classification-item><classification-symbol>A01B 1/00</classification-symbol>
+        |      <classification-item><classification-symbol>A01B 1/02</classification-symbol></classification-item>
+        |    </classification-item>
+        |  </classification-item>
+        |</class-scheme>""".stripMargin,
+    "cpc-scheme-A01C.xml" ->
+      """<class-scheme>
+        |  <classification-item><classification-symbol>A01B</classification-symbol>
+        |    <classification-item><classification-symbol>A01B 1/00</classification-symbol></classification-item>
+        |  </classification-item>
+        |  <classification-item><classification-symbol>A01C</classification-symbol>
+        |    <classification-item><classification-symbol>A01C 1/00</classification-symbol></classification-item>
+        |  </classification-item>
+        |</class-scheme>""".stripMargin,
+    "cpc-scheme-A01D.xml" ->
+      """<class-scheme>
+        |  <classification-item><classification-symbol>A01B</classification-symbol>
+        |    <classification-item><classification-symbol>A01B 1/02</classification-symbol></classification-item>
+        |  </classification-item>
+        |  <classification-item><classification-symbol>A01D</classification-symbol>
+        |    <classification-item><classification-symbol>A01D 1/00</classification-symbol></classification-item>
+        |  </classification-item>
+        |</class-scheme>""".stripMargin)
+
+  def multiMemberSchemeZip(dir: Path): Path =
+    zip(dir, s"CPCSchemeXML$Version.zip", multiMemberScheme)
+
   /** All four zips into one data dir; returns it. */
   def dataDir(): Path = {
     val dir = Files.createTempDirectory("cpc-fixtures")

@@ -3,7 +3,15 @@ package graft
 import graft.operators.{CpcPipeline, CpcValidator}
 import graft.sources.{Acquisition, CpcDimSources, LocalFixtureFetcher}
 import java.nio.file.Files
+import org.apache.spark.sql.catalyst.plans.logical.Command
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.concurrent.ThreadSignaler
+import org.scalatest.concurrent.TimeLimits._
+import org.scalatest.time.SpanSugar._
+import scala.jdk.CollectionConverters._
 
 class CpcSourcesSpec extends GraftSpec {
 
@@ -43,6 +51,79 @@ class CpcSourcesSpec extends GraftSpec {
     val m = ed.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(m == Map("A01" -> "A", "A01B" -> "A01",
       "A01B1/00" -> "A01B", "A01B1/02" -> "A01B1/00"))
+  }
+
+  test("scheme xml: keep-last across members survives the member repartition") {
+    val multi = Files.createTempDirectory("cpc-scheme-multi")
+    val ed = CpcDimSources.schemeEdges(spark,
+      CpcFixtures.multiMemberSchemeZip(multi).toString)
+    val rows = ed.collect().map(r => r.getString(0) -> r.getString(1))
+    assert(rows.length == rows.map(_._1).distinct.length) // one edge per child
+    assert(rows.toMap == Map("A01B1/00" -> "A01B", "A01B1/02" -> "A01B",
+      "A01C1/00" -> "A01C", "A01D1/00" -> "A01D"))
+  }
+
+  test("clean run: the gate is the only query before the first write") {
+    // each SQL execution in order; writes are commands, the gate is a query
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        events.add(if (qe.logical.isInstanceOf[Command]) "write" else "query")
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        events.add("failure")
+    }
+    val out = Files.createTempDirectory("cpc-out-gate")
+    spark.listenerManager.register(listener)
+    try {
+      val rep = CpcPipeline.run(spark, dir.resolve(s"CPCTitleList$v.zip").toString,
+        dir.toString, v, out.toString)
+      assert(rep == CpcPipeline.Report(6, 0, Nil))
+      // the listener bus is asynchronous but ordered: once all three writes
+      // arrived, everything before them has too
+      eventually(timeout(30.seconds)) {
+        assert(events.asScala.count(_ == "write") == 3)
+      }
+      assert(events.asScala.toSeq == Seq("query", "write", "write", "write"))
+    } finally spark.listenerManager.unregister(listener)
+
+    // a dirty frame still gets the ordered first-invalid list with warnings
+    import spark.implicits._
+    val dirty = Seq(
+      ("Z99", Option.empty[Double], "bogus", "Z", "Z99", null: String),
+      ("A01", Option.empty[Double], "AGRICULTURE", "A", "A01", null: String),
+      ("B99X", Option.empty[Double], "retired", "B", "B99", "B99X"))
+      .toDF("symbol", "level", "title", "section", "class", "subclass")
+    val rep = CpcPipeline.report(CpcPipeline.validateTitles(spark, dirty, dir.toString, v))
+    assert(rep == CpcPipeline.Report(3, 2, Seq(
+      "B99X" -> Seq("Symbol status: INACTIVE", "Symbol not found in schema hierarchy"),
+      "Z99" -> Seq("Invalid symbol format", "Symbol not found in symbol list",
+        "Symbol status: UNKNOWN", "Symbol not found in schema hierarchy"))))
+  }
+
+  test("refusal: run over one invalid title returns the gate's report, publishes nothing") {
+    // the fixture's titles plus one retired (INACTIVE) subclass
+    val titleZip = CpcFixtures.zip(Files.createTempDirectory("cpc-titles"),
+      s"CPCTitleList$v.zip", Seq("cpc-section-A.txt" ->
+        s"${CpcFixtures.titleLines}\nB99X RETIRED SUBCLASS")).toString
+    val out = Files.createTempDirectory("cpc-out-refused")
+    val rep = CpcPipeline.run(spark, titleZip, dir.toString, v, out.toString)
+    assert(rep.invalid == 1 && rep.firstInvalid.map(_._1) == Seq("B99X"))
+    assert(rep == CpcPipeline.report(CpcPipeline.validateTitles(spark,
+      CpcPipeline.parseTitles(spark, titleZip), dir.toString, v)))
+    assert(Seq(s"cpc_schema_$v.parquet", s"cpc_schema_$v.csv", "cpc_schema_snapshots")
+      .forall(t => Files.notExists(out.resolve(t))))
+  }
+
+  test("a failing publish write: run throws and releases the titles cache") {
+    spark.catalog.clearCache()
+    val out = Files.createTempDirectory("cpc-out-blocked")
+    // a regular file where the snapshot table's directory must go
+    Files.writeString(out.resolve("cpc_schema_snapshots"), "not a directory")
+    failAfter(2.minutes) {
+      intercept[Exception](CpcPipeline.run(spark,
+        dir.resolve(s"CPCTitleList$v.zip").toString, dir.toString, v, out.toString))
+    }(ThreadSignaler)
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("end-to-end pipeline: clean validation publishes versioned parquet+csv") {
