@@ -57,21 +57,13 @@ object Bpe {
     out.toArray
   }
 
-  /** Spark's string SortOrder on the driver: byte-wise UTF-8
-    * ([[org.apache.spark.unsafe.types.UTF8String]]) — code-point order,
-    * NOT String.compareTo's UTF-16 code-unit order. */
-  private def utf8Cmp(a: String, b: String): Int =
-    org.apache.spark.unsafe.types.UTF8String.fromString(a)
-      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
-
-  /** COUNT-GATED driver merge loop (the [[GraphOps]]/[[Dedup]] small-
-    * relation discipline): BPE training never iterates the corpus —
-    * every round runs on the vocab-sized (symbols, count) table — so at
-    * or under `maxDriverWords` distinct words the whole merge loop runs
-    * in memory on the collected table: exact long pair counts, the same
-    * (count desc, left, right) argmax with the tie-break in UTF8 byte
-    * order, the same [[mergeOnce]] application and `minPairCount` stop.
-    * A web-scale vocabulary stays on the distributed loop unchanged. */
+  /** Driver merge loop behind [[DriverGate]]: BPE training never
+    * iterates the corpus — every round runs on the vocab-sized
+    * (symbols, count) table — so under the gate the whole merge loop
+    * runs in memory on the collected table: exact long pair counts, the
+    * same (count desc, left, right) argmax with the tie-break in UTF8
+    * byte order, the same [[mergeOnce]] application and `minPairCount`
+    * stop. A web-scale vocabulary stays on the distributed loop. */
   private def trainDriver(rows: Array[WordRow], numMerges: Int,
       minPairCount: Long): Seq[Merge] = {
     val syms = rows.map(_.symbols)
@@ -95,8 +87,8 @@ object Bpe {
       var bestL: String = null; var bestR: String = null; var bestC = 0L
       pc.foreach { case ((l, rr), v) =>
         val better = bestL == null || v > bestC || (v == bestC && {
-          val cl = utf8Cmp(l, bestL)
-          cl < 0 || (cl == 0 && utf8Cmp(rr, bestR) < 0)
+          val cl = DriverGate.utf8Compare(l, bestL)
+          cl < 0 || (cl == 0 && DriverGate.utf8Compare(rr, bestR) < 0)
         })
         if (better) { bestL = l; bestR = rr; bestC = v }
       }
@@ -116,24 +108,19 @@ object Bpe {
   /** Learns `numMerges` merge rules from the corpus. Rounds that find no
     * pair with count >= `minPairCount` stop early. */
   def train(docs: DataFrame, numMerges: Int, minPairCount: Long = 2L,
-      textCol: String = "text", maxDriverWords: Long = 1L << 20): Seq[Merge] = {
+      textCol: String = "text"): Seq[Merge] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    var words: Dataset[WordRow] = docs
+    // above the [[DriverGate]] the distributed loop below continues on
+    // the materialized checkpoint
+    var words: Dataset[WordRow] = DriverGate.collect(docs
       .select(explode(TextAnalysis.tokens(col(textCol))).as("word"))
       .where(length(col("word")) > 0)
       .groupBy("word").agg(count(lit(1)).as("count"))
       .as[(String, Long)]
-      .map { case (w, c) => WordRow(toSymbols(w), c) }
-      .localCheckpoint(eager = false)
-    // COUNT GATE: the count is also the materializing action — at or
-    // under the gate the collect reads frozen blocks and the loop runs
-    // on the driver; above it the distributed loop below continues on
-    // the now-materialized checkpoint
-    if (words.count() <= maxDriverWords) {
-      val rows = words.collect()
-      IterUtils.unpersistCheckpoint(words)
-      return trainDriver(rows, numMerges, minPairCount)
+      .map { case (w, c) => WordRow(toSymbols(w), c) }) match {
+      case Right(rows) => return trainDriver(rows, numMerges, minPairCount)
+      case Left(ck) => ck
     }
     val merges = Seq.newBuilder[Merge]
     var r = 0

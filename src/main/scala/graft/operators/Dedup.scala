@@ -505,69 +505,43 @@ object Dedup {
     * small-star, Kiveris et al.). The driver loop only reads a per-round
     * convergence COUNT; labels are localCheckpoint'd per round so lineage
     * doesn't deepen. */
-  def duplicateClusters(pairs: DataFrame, maxRounds: Int = 25,
-      maxDriverEdges: Long = 1L << 20): DataFrame = {
-    // COUNT-GATED driver fast path (the [[Incremental]] discipline,
-    // r21-vetted there): a near-dup pair graph is bounded by the
-    // DUPLICATE mass, orders of magnitude below the corpus, so at or
-    // under `maxDriverEdges` edges (16 MB of long pairs — driver-safe)
-    // one path-compressed union-find replaces the whole pointer-jumping
+  def duplicateClusters(pairs: DataFrame, maxRounds: Int = 25): DataFrame = {
+    // driver fast path behind [[DriverGate]]: a near-dup pair graph is
+    // bounded by the DUPLICATE mass, orders of magnitude below the corpus,
+    // so one path-compressed union-find replaces the whole pointer-jumping
     // cascade: 2 jobs total where the distributed loop pays ~2 jobs per
-    // round plus the per-round exchange work. Union-by-min provably
-    // yields the same canonical-min labels (the root of every merge is
-    // the min member id — the fixpoint of min-label propagation).
-    // Long-id inputs only (every corpus-scale caller): other id types
-    // keep the distributed loop so their output schema is untouched.
-    // Above the gate — or if the driver can't hold the edges — the
-    // distributed loop below runs exactly as before.
-    val spark = pairs.sparkSession
+    // round plus the per-round exchange work. Union-by-min yields the same
+    // canonical-min labels (the root of every merge is the min member id —
+    // the fixpoint of min-label propagation). Long-id inputs only (every
+    // corpus-scale caller): other id types keep the distributed loop so
+    // their output schema is untouched.
     val longIds = Seq("id_a", "id_b").forall(c =>
       pairs.schema(c).dataType == org.apache.spark.sql.types.LongType)
-    if (longIds) {
-      // lazy checkpoint: the gate count is a full scan and doubles as
-      // the materializing action; the collect (or the distributed loop)
-      // then reads the frozen blocks
-      val lp = pairs.select(col("id_a"), col("id_b"))
-        .localCheckpoint(eager = false)
-      val nEdges = lp.count()
-      if (nEdges <= maxDriverEdges) {
+    if (!longIds) return duplicateClustersDistributed(pairs, maxRounds,
+      releaseInput = false)
+    DriverGate.collect(pairs.select(col("id_a"), col("id_b"))) match {
+      case Right(rows) =>
+        val spark = pairs.sparkSession
         import spark.implicits._
-        val es = lp.collect().map(r => (r.getLong(0), r.getLong(1)))
-        IterUtils.unpersistCheckpoint(lp)
-        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x // path compression
-          while (parent.getOrElse(c, c) != c) {
-            val nxt = parent(c); parent(c) = r; c = nxt
-          }
-          r
-        }
-        es.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
-        val out = es.iterator.flatMap(e => Iterator(e._1, e._2))
-          .toArray.distinct.map(x => (x, find(x))).toSeq
-        return out.toDF("doc_id", "cluster")
-      }
-      // gate exceeded: fall through to the distributed loop over the
-      // already-materialized checkpoint
-      return duplicateClustersDistributed(lp, maxRounds)
+        DriverGate.componentLabels(rows.map(r => (r.getLong(0), r.getLong(1))))
+          .toSeq.toDF("doc_id", "cluster")
+      // above the gate the loop reads the already-materialized checkpoint
+      case Left(lp) => duplicateClustersDistributed(lp, maxRounds,
+        releaseInput = true)
     }
-    duplicateClustersDistributed(pairs, maxRounds)
   }
 
   /** The distributed min-label-propagation + pointer-jumping loop —
     * the above-the-gate path of [[duplicateClusters]], and the only
-    * path for non-long id types. */
+    * path for non-long id types. `releaseInput`: `pairs` is a checkpoint
+    * this loop owns, released once the edge checkpoint has read it. */
   private def duplicateClustersDistributed(pairs: DataFrame,
-      maxRounds: Int): DataFrame = {
+      maxRounds: Int, releaseInput: Boolean): DataFrame = {
     // undirected edge list + the nodes themselves
     val edges = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
       .union(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
       .localCheckpoint()
+    if (releaseInput) IterUtils.unpersistCheckpoint(pairs)
     var labels = edges.select(col("u").as("id")).distinct()
       .select(col("id"), col("id").as("cluster"))
       .localCheckpoint()

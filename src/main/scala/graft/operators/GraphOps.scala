@@ -30,10 +30,10 @@ object GraphOps {
     * node-sized; nothing is collected to the driver except the single
     * node COUNT that seeds the uniform prior. */
   def pageRank(edges: DataFrame, iterations: Int,
-      damping: Double = 0.85, maxDriverEdges: Long = 1L << 20): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     // COUNT-GATED driver fast path (see [[driverPageRankRun]]); above
     // the gate the distributed loop below runs unchanged
-    driverPageRankRun(edges, iterations, damping, 0.0, maxDriverEdges) match {
+    driverPageRankRun(edges, iterations, damping, 0.0) match {
       case Some((ids, rank, _)) =>
         import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
         val schema = StructType(Seq(
@@ -261,21 +261,18 @@ object GraphOps {
     * shrinks. Edges are eagerly checkpointed per round with the
     * superseded round released ([[pageRank]] lifetime discipline); no
     * windows, no driver state beyond the loop counter. */
-  /** COUNT-GATED driver fast path shared by the k-core family (the
-    * [[Dedup.duplicateClusters]] discipline): the deduped undirected
-    * edge list is lazily checkpointed and counted — at or under
-    * `maxDriverEdges` (16 MB of long pairs, driver-safe) it is
-    * collected once and the synchronous peel runs in memory (pure
-    * integer set semantics, so the per-round survivor sets are
-    * IDENTICAL to the join-aggregate program's); above the gate, or
-    * for non-long id types, `None` is returned and the caller runs the
-    * distributed loop unchanged. Returns the per-round trajectory
+  /** Driver fast path shared by the k-core family, behind
+    * [[DriverGate]]: the deduped undirected edge list is collected once
+    * and the synchronous peel runs in memory (pure integer set
+    * semantics, so the per-round survivor sets are IDENTICAL to the
+    * join-aggregate program's); above the gate, or for non-long id
+    * types, `None` is returned and the caller runs the distributed
+    * loop unchanged. Returns the per-round trajectory
     * (round, survivors, converged) under the same early-exit +
     * rounds-budget contract, plus the final (node, core_degree) pairs
     * (degree among surviving nodes; zero-degree nodes absent, exactly
     * the semi-join + groupBy relation). */
-  private def driverPeel(edges: DataFrame, k: Int, rounds: Int,
-      maxDriverEdges: Long)
+  private def driverPeel(edges: DataFrame, k: Int, rounds: Int)
       : Option[(Seq[(Long, Long, Boolean)], Seq[(Long, Long)])] = {
     val longIds = Seq("src", "dst").forall(c =>
       edges.schema(c).dataType == org.apache.spark.sql.types.LongType)
@@ -284,11 +281,10 @@ object GraphOps {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .where(col("a") =!= col("b")).distinct()
-      .localCheckpoint(eager = false)
-    val n = und.count()
-    if (n > maxDriverEdges) { IterUtils.unpersistCheckpoint(und); return None }
-    val es = und.collect().map(r => (r.getLong(0), r.getLong(1)))
-    IterUtils.unpersistCheckpoint(und)
+    val es = DriverGate.collectOrRelease(und) match {
+      case Some(rows) => rows.map(r => (r.getLong(0), r.getLong(1)))
+      case None => return None
+    }
     val adj = scala.collection.mutable.HashMap
       .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
     es.foreach { case (a, b) =>
@@ -316,10 +312,9 @@ object GraphOps {
     Some((traj.toSeq, coreDeg))
   }
 
-  def kCore(edges: DataFrame, k: Int, rounds: Int,
-      maxDriverEdges: Long = 1L << 20): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, s"kCore k=$k rounds=$rounds")
-    driverPeel(edges, k, rounds, maxDriverEdges) match {
+    driverPeel(edges, k, rounds) match {
       case Some((_, coreDeg)) =>
         val spark = edges.sparkSession
         import spark.implicits._
@@ -427,12 +422,11 @@ object GraphOps {
         labels("label").as("old"))
   }
 
-  def labelPropagation(edges: DataFrame, rounds: Int,
-      maxDriverEdges: Long = 1L << 20): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     // COUNT-GATED driver fast path (see [[driverLpRun]]): synchronous
     // LP is idempotent at the changed==0 fixpoint, so the early exit
     // yields labels IDENTICAL to the fixed-round unroll
-    driverLpRun(edges, rounds, earlyExit = false, maxDriverEdges) match {
+    driverLpRun(edges, rounds, earlyExit = false) match {
       case Some((labels, _)) =>
         return lpLabelsDf(edges.sparkSession,
           edges.schema("src").dataType, labels)
@@ -595,12 +589,11 @@ object GraphOps {
     * is (src × reached-node)-sized — all-sources Brandes is inherently
     * n·reach work; run it on thresholded/sampled graphs, or shard the
     * source set across jobs at web scale. */
-  def betweenness(edges: DataFrame, depth: Int,
-      maxDriverEdges: Long = 1L << 20): DataFrame = {
+  def betweenness(edges: DataFrame, depth: Int): DataFrame = {
     // COUNT-GATED driver fast path (see [[driverBetweenness]]); above
     // the gate (or the n·m work budget) the distributed program below
     // runs unchanged
-    driverBetweenness(edges, depth, maxDriverEdges) match {
+    driverBetweenness(edges, depth) match {
       case Some(df) => return df
       case None => ()
     }
@@ -766,9 +759,8 @@ object GraphOps {
       .join(alive.select(col("node").as("v")), Seq("v"), "left_semi")
       .groupBy(col("u").as("node")).agg(count(lit(1)).as("d"))
 
-  def kCorePeel(edges: DataFrame, k: Int, rounds: Int,
-      maxDriverEdges: Long = 1L << 20): DataFrame = {
-    driverPeel(edges, k, rounds, maxDriverEdges) match {
+  def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+    driverPeel(edges, k, rounds) match {
       case Some((_, coreDeg)) =>
         val spark = edges.sparkSession
         import spark.implicits._
@@ -836,12 +828,11 @@ object GraphOps {
     * real graphs converge in a handful of rounds, and a pinned
     * `rounds` either wastes passes past the fixpoint or silently
     * under-peels — this reports which happened. */
-  def kCoreTrajectory(edges: DataFrame, k: Int, maxRounds: Int,
-      maxDriverEdges: Long = 1L << 20): DataFrame = {
+  def kCoreTrajectory(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, s"maxRounds=$maxRounds must be >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
-    driverPeel(edges, k, maxRounds, maxDriverEdges) match {
+    driverPeel(edges, k, maxRounds) match {
       case Some((traj0, _)) =>
         // post-fixpoint rounds are the fixpoint verbatim — emitted, not run
         val filled = traj0 ++ ((traj0.size + 1) to maxRounds)
@@ -892,13 +883,12 @@ object GraphOps {
     * SCALE: per round, [[labelPropagation]]'s profile plus one
     * node-keyed join for the changed count; driver state is one Long
     * per round. */
-  def labelPropagationTrajectory(edges: DataFrame, maxRounds: Int,
-      maxDriverEdges: Long = 1L << 20): DataFrame = {
+  def labelPropagationTrajectory(edges: DataFrame, maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, s"maxRounds=$maxRounds must be >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
     // COUNT-GATED driver fast path (see [[driverLpRun]])
-    driverLpRun(edges, maxRounds, earlyExit = true, maxDriverEdges) match {
+    driverLpRun(edges, maxRounds, earlyExit = true) match {
       case Some((_, traj)) =>
         return traj.toDF("round", "changed", "converged")
       case None => ()
@@ -962,14 +952,13 @@ object GraphOps {
     * node-keyed join for the residual; driver state is one Double per
     * round; eager checkpoint + deterministic release per round. */
   def pageRankTrajectory(edges: DataFrame, maxRounds: Int,
-      damping: Double = 0.85, tol: Double = 1e-6,
-      maxDriverEdges: Long = 1L << 20): DataFrame = {
+      damping: Double = 0.85, tol: Double = 1e-6): DataFrame = {
     require(maxRounds >= 1, s"maxRounds=$maxRounds must be >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
     // COUNT-GATED driver fast path (see [[driverPageRankRun]]); above
     // the gate the distributed loop below runs unchanged
-    driverPageRankRun(edges, maxRounds, damping, tol, maxDriverEdges) match {
+    driverPageRankRun(edges, maxRounds, damping, tol) match {
       case Some((ids, _, traj)) =>
         require(ids.nonEmpty, "pageRankTrajectory: edge relation is empty")
         return traj.toDF("round", "residual", "converged")
@@ -1173,10 +1162,11 @@ object GraphOps {
       .localCheckpoint()
     val nodes = e0.select(col("a")).union(e0.select(col("b"))).distinct()
       .collect().map(_.getLong(0)).sorted
-    val comp = scala.collection.mutable.Map(nodes.map(n => n -> n): _*)
+    val comp = new DriverGate.LongUnionFind
     val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     for (_ <- 1 to rounds) {
-      val labDF = broadcast(comp.toSeq.toDF("id", "comp"))
+      val labDF = broadcast(nodes.map(n => (n, comp.find(n))).toSeq
+        .toDF("id", "comp"))
       val sel = e0
         .join(labDF.select(col("id").as("a"), col("comp").as("ca")), "a")
         .join(labDF.select(col("id").as("b"), col("comp").as("cb")), "b")
@@ -1192,74 +1182,20 @@ object GraphOps {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       acc ++= picked.filterNot(p =>
         acc.exists(q => q._1 == p._1 && q._2 == p._2))
-      // merge the touched components (driver union-find, min label)
-      picked.foreach { case (a, b, _) =>
-        val (ca, cb) = (comp(a), comp(b))
-        if (ca != cb) {
-          val (keep, drop) = (math.min(ca, cb), math.max(ca, cb))
-          comp.mapValuesInPlace((_, c) => if (c == drop) keep else c)
-        }
-      }
+      // merge the touched components (min label = min member id)
+      picked.foreach { case (a, b, _) => comp.union(a, b) }
     }
     acc.toSeq.toDF("a", "b", "w")
       .orderBy(col("w").desc, col("a"), col("b"))
   }
 
   // -------------------------------------------------------------------
-  // COUNT-GATED driver fast paths for the numeric-mass / vote loop
-  // family — the [[driverPeel]] / [[Dedup.duplicateClusters]] discipline
-  // extended to id-type-GENERIC graphs (the trade graphs key on nation
-  // NAMES): the loop-invariant edge relation is lazily checkpointed,
-  // counted (the gate and the materializing action in one job), and at
-  // or under the driver-safe bound collected once; the whole iteration
-  // then runs in memory, replicating the distributed program's
-  // arithmetic step for step. Above the gate — or for id types whose
-  // Spark sort order we do not replicate — the distributed loop runs
-  // unchanged, so nothing here is a local[32] tune: at corpus scale the
-  // gate simply never fires.
+  // Driver fast paths for the numeric-mass / vote loop family, behind
+  // [[DriverGate]]: id-type-GENERIC (the trade graphs key on nation
+  // NAMES), so each replicates the distributed program's arithmetic and
+  // ordering step for step. For id types whose Spark sort order is not
+  // replicated, the distributed loop runs.
   // -------------------------------------------------------------------
-
-  /** Lazily checkpoints `df`, counts it (gate + materializing action in
-    * one job — the collect then reads frozen blocks instead of
-    * re-running the plan), collects at or under `maxRows`, and releases
-    * the blocks either way. None = stay distributed. */
-  private def gatedCollect(df: DataFrame,
-      maxRows: Long): Option[Array[org.apache.spark.sql.Row]] = {
-    val ck = df.localCheckpoint(eager = false)
-    val n = ck.count()
-    val out = if (n > maxRows) None else Some(ck.collect())
-    IterUtils.unpersistCheckpoint(ck)
-    out
-  }
-
-  /** Driver-side total order matching Spark's SortOrder for the id
-    * types the gates support: longs/ints natural, strings by
-    * [[org.apache.spark.unsafe.types.UTF8String]] (byte-wise UTF-8 =
-    * code-point order) — NOT String.compareTo, whose UTF-16 code-unit
-    * order diverges for supplementary characters. None = unsupported
-    * type, the caller stays distributed. */
-  private def idOrdering(
-      dt: org.apache.spark.sql.types.DataType): Option[Ordering[Any]] = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-    dt match {
-      case LongType => Some(Ordering.by((v: Any) => v.asInstanceOf[Long]))
-      case IntegerType => Some(Ordering.by((v: Any) => v.asInstanceOf[Int]))
-      case StringType => Some(new Ordering[Any] {
-        def compare(a: Any, b: Any): Int =
-          org.apache.spark.unsafe.types.UTF8String
-            .fromString(a.asInstanceOf[String])
-            .compareTo(org.apache.spark.unsafe.types.UTF8String
-              .fromString(b.asInstanceOf[String]))
-      })
-      case _ => None
-    }
-  }
-
-  /** Spark's Round(x, 0) on a double, exactly: decimal HALF_UP over the
-    * canonical Double.toString representation (Catalyst RoundBase's
-    * DoubleType branch; the [[QualityClassifier]] r6 precedent). */
-  private def sparkRound(x: Double): Double =
-    BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** All-sources Brandes work budget for [[driverBetweenness]]:
     * n·m beyond this runs distributed even when the edge COUNT passes
@@ -1267,7 +1203,7 @@ object GraphOps {
     * the budget keeps the driver loop under ~10⁸ inner steps). */
   private val BetweennessWorkBudget = 1L << 26
 
-  /** COUNT-GATED driver Brandes for [[betweenness]]: collects the
+  /** Driver Brandes for [[betweenness]]: collects the
     * Spark-computed deduped undirected edge list (so least/greatest/
     * distinct semantics never fork), interns ids, and replicates the
     * level-synchronous program exactly — exact integer σ (BigInt = the
@@ -1277,16 +1213,16 @@ object GraphOps {
     * level sum ORDER differs from the exchange's, which is already the
     * operator's cross-engine contract (the oracle replays these sums in
     * DuckDB's own order against the same 1e-9 quanta). */
-  private def driverBetweenness(edges: DataFrame, depth: Int,
-      maxDriverEdges: Long): Option[DataFrame] = {
+  private def driverBetweenness(edges: DataFrame, depth: Int)
+      : Option[DataFrame] = {
     val und = edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .where(col("a") =!= col("b")).distinct()
     val nodeType = und.schema("a").dataType
-    val rows = gatedCollect(und, maxDriverEdges) match {
-      case None => return None
+    val rows = DriverGate.collectOrRelease(und) match {
       case Some(rs) => rs
+      case None => return None
     }
     val idx = scala.collection.mutable.HashMap.empty[Any, Int]
     val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
@@ -1355,7 +1291,7 @@ object GraphOps {
             }
             j += 1
           }
-          dq(v) = sparkRound(acc * 1000000000.0).toLong
+          dq(v) = DriverGate.sparkRound(acc * 1000000000.0).toLong
           i2 += 1
         }
         bl -= 1
@@ -1373,7 +1309,7 @@ object GraphOps {
     val out = new java.util.ArrayList[org.apache.spark.sql.Row](n)
     var v = 0
     while (v < n) {
-      val bt = sparkRound(
+      val bt = DriverGate.sparkRound(
         (BigDecimal(sd(v)).toDouble / 1000000000.0) / 2.0 * 1000000.0) /
         1000000.0
       out.add(org.apache.spark.sql.Row(ids(v), bt))
@@ -1382,7 +1318,7 @@ object GraphOps {
     Some(spark.createDataFrame(out, schema))
   }
 
-  /** COUNT-GATED driver power loop shared by [[pageRank]] and
+  /** Driver power loop shared by [[pageRank]] and
     * [[pageRankTrajectory]]: collects the (src, dst, w)-cast edge
     * relation, replicates out-weight normalization, the damped update
     * and (for the trajectory) the max-norm residual + early exit in
@@ -1394,14 +1330,14 @@ object GraphOps {
     * oracle's independent replay. Returns (node ids, per-round rank
     * arrays' final state, trajectory rows). */
   private def driverPageRankRun(edges: DataFrame, maxRounds: Int,
-      damping: Double, tol: Double, maxDriverEdges: Long)
+      damping: Double, tol: Double)
       : Option[(Seq[Any], Array[Double],
           Seq[(Long, Double, Boolean)])] = {
     val e = edges.select(col("src"), col("dst"),
       col("w").cast("double").as("w"))
-    val rows = gatedCollect(e, maxDriverEdges) match {
-      case None => return None
+    val rows = DriverGate.collectOrRelease(e) match {
       case Some(rs) => rs
+      case None => return None
     }
     if (edges.schema("src").dataType != edges.schema("dst").dataType ||
         rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
@@ -1454,27 +1390,27 @@ object GraphOps {
     Some((ids.toSeq, rank, traj.toList))
   }
 
-  /** COUNT-GATED driver vote loop shared by [[labelPropagation]] and
+  /** Driver vote loop shared by [[labelPropagation]] and
     * [[labelPropagationTrajectory]]: collects the long-cast weighted
     * edge relation, replicates symmetrization + per-pair weight sums
     * (exact longs), the (ws desc, label asc) winner tie-break via the
-    * Spark-order [[idOrdering]], the vote-less restore, the changed
+    * Spark-order [[DriverGate.idOrdering]], the vote-less restore, the changed
     * count and the early exit + verbatim tail — integer semantics end
     * to end, so fast and distributed labels are IDENTICAL, not merely
     * within margin. Returns (final labels, trajectory). */
   private def driverLpRun(edges: DataFrame, maxRounds: Int,
-      earlyExit: Boolean, maxDriverEdges: Long)
+      earlyExit: Boolean)
       : Option[(Seq[(Any, Any)], Seq[(Long, Long, Boolean)])] = {
     val nodeType = edges.schema("src").dataType
-    val ord = idOrdering(nodeType) match {
-      case None => return None
+    val ord = DriverGate.idOrdering(nodeType) match {
       case Some(o) => o
+      case None => return None
     }
     val e = edges.select(col("src"), col("dst"),
       col("w").cast("long").as("w"))
-    val rows = gatedCollect(e, maxDriverEdges) match {
-      case None => return None
+    val rows = DriverGate.collectOrRelease(e) match {
       case Some(rs) => rs
+      case None => return None
     }
     if (edges.schema("src").dataType != edges.schema("dst").dataType ||
         rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))

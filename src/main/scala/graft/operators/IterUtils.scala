@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Helpers for iterative driver loops over eagerly localCheckpoint'd
   * DataFrames (connected components, PageRank, BPE training).
@@ -64,5 +66,110 @@ private[graft] final class ChainCheckpointer(every: Int = 8) {
   def release(): Unit = {
     if (live != null) IterUtils.unpersistCheckpoint(live)
     live = null
+  }
+}
+
+/** The one driver-side execution policy of the gated operators
+  * ([[Dedup.duplicateClusters]], the [[GraphOps]] k-core / betweenness /
+  * PageRank / label-propagation families, [[Bpe.train]],
+  * [[TextRank.keywords]] and [[Incremental.incrementalComponents]]' quotient),
+  * plus the Spark-semantics replicas their in-memory loops share.
+  *
+  * The gate: a loop-invariant relation of at most [[MaxRows]] rows is
+  * collected once and the whole loop runs in memory, replicating the
+  * distributed arithmetic; above it the distributed loop runs. A
+  * constant, not a setting: no caller has ever needed another value.
+  * [[distributedOnly]] shuts every gate for a scope, so a spec or a
+  * differential run can exercise the distributed branch on small inputs.
+  */
+private[graft] object DriverGate {
+
+  /** Row limit at or under which a gated relation is collected. */
+  val MaxRows: Long = 1L << 20
+
+  private val forced = new scala.util.DynamicVariable(false)
+
+  /** Runs `body` with every gate shut: each gated operator called inside
+    * the scope on this thread, nested calls included, takes its
+    * distributed branch. */
+  def distributedOnly[T](body: => T): T = forced.withValue(true)(body)
+
+  /** Lazily checkpoints `ds` and counts it — the gate and the
+    * materializing action in one job. At or under the gate the frozen
+    * blocks are collected and released: `Right(rows)`. Above it (or
+    * inside [[distributedOnly]]) the caller gets `Left(checkpoint)`,
+    * materialized, and owns its release. */
+  def collect[T](ds: Dataset[T]): Either[Dataset[T], Array[T]] = {
+    val ck = ds.localCheckpoint(eager = false)
+    val n = ck.count()
+    if (forced.value || n > MaxRows) Left(ck)
+    else {
+      val rows = ck.collect()
+      IterUtils.unpersistCheckpoint(ck)
+      Right(rows)
+    }
+  }
+
+  /** [[collect]] for callers that rebuild from their own input above the
+    * gate: the checkpoint is released and `None` returned. */
+  def collectOrRelease[T](ds: Dataset[T]): Option[Array[T]] =
+    collect(ds) match {
+      case Right(rows) => Some(rows)
+      case Left(ck) => IterUtils.unpersistCheckpoint(ck); None
+    }
+
+  /** Spark's string SortOrder: byte-wise UTF-8, i.e. code-point order —
+    * NOT String.compareTo, whose UTF-16 code-unit order diverges for
+    * supplementary characters. */
+  def utf8Compare(a: String, b: String): Int =
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+
+  /** Driver-side total order matching Spark's SortOrder for the id types
+    * the gated loops support: longs/ints natural, strings by
+    * [[utf8Compare]]. None = unsupported type, stay distributed. */
+  def idOrdering(dt: DataType): Option[Ordering[Any]] = dt match {
+    case LongType => Some(Ordering.by((v: Any) => v.asInstanceOf[Long]))
+    case IntegerType => Some(Ordering.by((v: Any) => v.asInstanceOf[Int]))
+    case StringType => Some(new Ordering[Any] {
+      def compare(a: Any, b: Any): Int =
+        utf8Compare(a.asInstanceOf[String], b.asInstanceOf[String])
+    })
+    case _ => None
+  }
+
+  /** Spark's Round(x, 0) on a double, exactly: decimal HALF_UP over the
+    * canonical Double.toString representation (Catalyst RoundBase's
+    * DoubleType branch). */
+  def sparkRound(x: Double): Double =
+    BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** (endpoint, component label) for each distinct endpoint of `edges`,
+    * in first-seen order — [[LongUnionFind]] over the whole edge list. */
+  def componentLabels(edges: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val uf = new LongUnionFind
+    edges.foreach { case (a, b) => uf.union(a, b) }
+    edges.flatMap(e => Array(e._1, e._2)).distinct.map(x => (x, uf.find(x)))
+  }
+
+  /** Path-compressed union-find over long ids, union by MIN root: every
+    * root is the smallest member of its set, i.e. exactly the canonical
+    * label min-label propagation converges to. */
+  final class LongUnionFind {
+    private val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) {
+        val nxt = parent(c); parent(c) = r; c = nxt
+      }
+      r
+    }
+
+    def union(a: Long, b: Long): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
   }
 }

@@ -230,8 +230,8 @@ object Pca {
     }
   }
 
-  private def r6(x: Double): Double = BigDecimal(x * 1000000.0)
-    .setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble / 1000000.0
+  private def r6(x: Double): Double =
+    DriverGate.sparkRound(x * 1000000.0) / 1000000.0
 
   /** Loadings table (rank, i, loading, lambda) for the top-`k`
     * components, 6 dp presentation rounding (the model itself is

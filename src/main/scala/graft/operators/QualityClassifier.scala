@@ -189,10 +189,7 @@ object QualityClassifier {
         // compose exactly like the oracle's round(w*1e6)/1e6: scale as a
         // double FIRST, then HALF_UP (away from zero — what both Spark
         // round() and DuckDB round() do; math.rint would tie-to-even)
-        (j.toLong, nm,
-          BigDecimal(wj * 1000000.0)
-            .setScale(0, BigDecimal.RoundingMode.HALF_UP)
-            .toDouble / 1000000.0) }
+        (j.toLong, nm, DriverGate.sparkRound(wj * 1000000.0) / 1000000.0) }
       .toDF("j", "feature", "weight")
   }
 

@@ -304,7 +304,7 @@ class Round16OpsSpec extends GraftSpec {
   }
 
   test("incrementalComponents: an over-gate quotient resolves through the distributed CC, labels identical") {
-    import graft.operators.{Dedup, Incremental}
+    import graft.operators.{Dedup, DriverGate, Incremental}
     def batch(pairs: (Long, Long)*): org.apache.spark.sql.DataFrame =
       pairs.toSeq.toDF("id_a", "id_b")
     def state(root: String): Seq[(Long, Long)] =
@@ -321,11 +321,12 @@ class Round16OpsSpec extends GraftSpec {
     Incremental.incrementalComponents(spark, rootFast, b2)
     val rootSlow = java.nio.file.Files.createTempDirectory("graft-r22-ccs")
       .resolve("state").toString
-    // gate of 0 forces EVERY quotient through the distributed fallback
-    Incremental.incrementalComponents(spark, rootSlow, b1,
-      maxDriverQuotient = 0L)
-    Incremental.incrementalComponents(spark, rootSlow, b2,
-      maxDriverQuotient = 0L)
+    // the shut gate forces EVERY quotient through the distributed CC,
+    // Dedup's own gate included
+    DriverGate.distributedOnly {
+      Incremental.incrementalComponents(spark, rootSlow, b1)
+      Incremental.incrementalComponents(spark, rootSlow, b2)
+    }
     val twin = Dedup.duplicateClusters(
         batch((1L, 2L), (3L, 4L), (5L, 6L), (7L, 8L), (1L, 3L), (1L, 5L),
           (1L, 7L), (3L, 5L), (3L, 7L), (5L, 7L)))
@@ -334,6 +335,17 @@ class Round16OpsSpec extends GraftSpec {
       "driver union-find fast path must match the batch CC twin")
     assert(state(rootSlow) == twin,
       "distributed fallback must produce identical canonical-min labels")
+    // proof the slow half ran the distributed loop: only it honours the
+    // round budget, and a 6-chain needs more than one propagation round
+    val rootBudget = java.nio.file.Files.createTempDirectory("graft-r22-ccb")
+      .resolve("state").toString
+    intercept[IllegalStateException] {
+      DriverGate.distributedOnly {
+        Incremental.incrementalComponents(spark, rootBudget,
+          batch((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L)),
+          maxRounds = 0)
+      }
+    }
   }
 
   test("SortedNeighborhood.pairs: w larger than any partition still walks the continuation forward") {

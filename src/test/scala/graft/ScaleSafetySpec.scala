@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, DriverGate, Similarity}
 import org.apache.spark.sql.functions._
 
 /** Proofs for the scale-safe candidate-generation rewrites: results must be
@@ -101,8 +101,8 @@ class ScaleSafetySpec extends GraftSpec {
       ).toDF("id_a", "id_b")
     val fast = Dedup.duplicateClusters(gnarly)
       .as[(Long, Long)].collect().toSet
-    val dist = Dedup.duplicateClusters(gnarly, maxDriverEdges = 0)
-      .as[(Long, Long)].collect().toSet
+    val dist = DriverGate.distributedOnly(Dedup.duplicateClusters(gnarly)
+      .as[(Long, Long)].collect().toSet)
     assert(fast == dist, s"fast=$fast dist=$dist")
     // canonical-min: the chain + its big-id attachment all label 1
     assert(fast.filter(_._1 <= 10).forall(_._2 == 1L))
@@ -127,18 +127,19 @@ class ScaleSafetySpec extends GraftSpec {
     for (k <- 1 to 3; rounds <- Seq(1, 2, 8)) {
       val fast = GraphOps.kCore(edges, k, rounds)
         .as[(Long, Long)].collect().toSet
-      val dist = GraphOps.kCore(edges, k, rounds, maxDriverEdges = 0)
-        .as[(Long, Long)].collect().toSet
+      val dist = DriverGate.distributedOnly(GraphOps.kCore(edges, k, rounds)
+        .as[(Long, Long)].collect().toSet)
       assert(fast == dist, s"kCore k=$k rounds=$rounds: $fast != $dist")
       val fp = GraphOps.kCorePeel(edges, k, rounds)
         .as[(Long, Long)].collect().toSet
-      val dp = GraphOps.kCorePeel(edges, k, rounds, maxDriverEdges = 0)
-        .as[(Long, Long)].collect().toSet
+      val dp = DriverGate.distributedOnly(GraphOps.kCorePeel(edges, k, rounds)
+        .as[(Long, Long)].collect().toSet)
       assert(fp == dp, s"kCorePeel k=$k rounds=$rounds: $fp != $dp")
       val ft = GraphOps.kCoreTrajectory(edges, k, rounds)
         .as[(Long, Long, Boolean)].collect().toSeq.sortBy(_._1)
-      val dt = GraphOps.kCoreTrajectory(edges, k, rounds, maxDriverEdges = 0)
-        .as[(Long, Long, Boolean)].collect().toSeq.sortBy(_._1)
+      val dt = DriverGate.distributedOnly(
+        GraphOps.kCoreTrajectory(edges, k, rounds)
+          .as[(Long, Long, Boolean)].collect().toSeq.sortBy(_._1))
       assert(ft == dt, s"kCoreTrajectory k=$k rounds=$rounds: $ft != $dt")
     }
   }
@@ -158,8 +159,8 @@ class ScaleSafetySpec extends GraftSpec {
     for (edges <- Seq(longEdges, strEdges); depth <- Seq(1, 3, 6)) {
       val fast = GraphOps.betweenness(edges, depth)
         .collect().map(r => (r.get(0), r.getDouble(1))).toSet
-      val dist = GraphOps.betweenness(edges, depth, maxDriverEdges = 0)
-        .collect().map(r => (r.get(0), r.getDouble(1))).toSet
+      val dist = DriverGate.distributedOnly(GraphOps.betweenness(edges, depth)
+        .collect().map(r => (r.get(0), r.getDouble(1))).toSet)
       assert(fast == dist, s"betweenness depth=$depth: $fast != $dist")
       // at depth 1 no pair routes THROUGH anything — all zeros is correct
       if (depth >= 3) assert(fast.exists(_._2 > 0.0))
@@ -180,8 +181,8 @@ class ScaleSafetySpec extends GraftSpec {
     for (iters <- Seq(0, 1, 5)) {
       val fast = GraphOps.pageRank(edges, iters)
         .collect().map(r => (r.getString(0), r6(r.getDouble(1)))).toSet
-      val dist = GraphOps.pageRank(edges, iters, maxDriverEdges = 0)
-        .collect().map(r => (r.getString(0), r6(r.getDouble(1)))).toSet
+      val dist = DriverGate.distributedOnly(GraphOps.pageRank(edges, iters)
+        .collect().map(r => (r.getString(0), r6(r.getDouble(1)))).toSet)
       assert(fast == dist, s"pageRank iters=$iters: $fast != $dist")
     }
     def r9(x: Double) = math.rint(x * 1e9) / 1e9
@@ -189,18 +190,17 @@ class ScaleSafetySpec extends GraftSpec {
       val fast = GraphOps.pageRankTrajectory(edges, 8, tol = tol)
         .collect().map(r => (r.getLong(0), r9(r.getDouble(1)), r.getBoolean(2)))
         .sortBy(_._1)
-      val dist = GraphOps
-        .pageRankTrajectory(edges, 8, tol = tol, maxDriverEdges = 0)
+      val dist = DriverGate.distributedOnly(GraphOps
+        .pageRankTrajectory(edges, 8, tol = tol)
         .collect().map(r => (r.getLong(0), r9(r.getDouble(1)), r.getBoolean(2)))
-        .sortBy(_._1)
+        .sortBy(_._1))
       assert(fast.toSeq == dist.toSeq, s"prTraj tol=$tol: $fast != $dist")
     }
     // empty edge relation: both paths must fail loudly, same message
     val empty = Seq.empty[(String, String, Long)].toDF("src", "dst", "w")
-    for (gate <- Seq(1L << 20, 0L)) {
-      val ex = intercept[IllegalArgumentException] {
-        GraphOps.pageRankTrajectory(empty, 4, maxDriverEdges = gate)
-      }
+    val run = () => GraphOps.pageRankTrajectory(empty, 4)
+    for (path <- Seq(run, () => DriverGate.distributedOnly(run()))) {
+      val ex = intercept[IllegalArgumentException](path())
       assert(ex.getMessage.contains("edge relation is empty"))
     }
   }
@@ -222,14 +222,14 @@ class ScaleSafetySpec extends GraftSpec {
     for (g <- Seq(edges, bipartite); rounds <- Seq(1, 4, 8)) {
       val fast = GraphOps.labelPropagation(g, rounds)
         .as[(String, String)].collect().toSet
-      val dist = GraphOps.labelPropagation(g, rounds, maxDriverEdges = 0)
-        .as[(String, String)].collect().toSet
+      val dist = DriverGate.distributedOnly(GraphOps.labelPropagation(g, rounds)
+        .as[(String, String)].collect().toSet)
       assert(fast == dist, s"lp rounds=$rounds: $fast != $dist")
       val ft = GraphOps.labelPropagationTrajectory(g, rounds)
         .as[(Long, Long, Boolean)].collect().toSeq.sortBy(_._1)
-      val dt = GraphOps
-        .labelPropagationTrajectory(g, rounds, maxDriverEdges = 0)
-        .as[(Long, Long, Boolean)].collect().toSeq.sortBy(_._1)
+      val dt = DriverGate.distributedOnly(GraphOps
+        .labelPropagationTrajectory(g, rounds)
+        .as[(Long, Long, Boolean)].collect().toSeq.sortBy(_._1))
       assert(ft == dt, s"lpTraj rounds=$rounds: $ft != $dt")
     }
     // long ids keep working through the same fast path
@@ -237,16 +237,16 @@ class ScaleSafetySpec extends GraftSpec {
       .toDF("src", "dst", "w")
     assert(GraphOps.labelPropagation(longG, 4).as[(Long, Long)]
       .collect().toSet ==
-      GraphOps.labelPropagation(longG, 4, maxDriverEdges = 0)
-        .as[(Long, Long)].collect().toSet)
+      DriverGate.distributedOnly(GraphOps.labelPropagation(longG, 4)
+        .as[(Long, Long)].collect().toSet))
   }
 
   test("Bpe.train driver merge loop == distributed (real corpus + tie corpus)") {
     import graft.operators.Bpe
     // real corpus: 25 merges, counts far apart and close together
     val fast = Bpe.train(docs, numMerges = 25, minPairCount = 1L)
-    val dist = Bpe.train(docs, numMerges = 25, minPairCount = 1L,
-      maxDriverWords = 0L)
+    val dist = DriverGate.distributedOnly(
+      Bpe.train(docs, numMerges = 25, minPairCount = 1L))
     assert(fast == dist, s"fast=$fast dist=$dist")
     assert(fast.size == 25)
     // adversarial ties: every adjacent pair in "abab"/"baba" counts the
@@ -256,8 +256,8 @@ class ScaleSafetySpec extends GraftSpec {
       .toDF("doc_id", "text")
     for (min <- Seq(1L, 2L, 3L)) {
       val f = Bpe.train(tiny, numMerges = 10, minPairCount = min)
-      val d = Bpe.train(tiny, numMerges = 10, minPairCount = min,
-        maxDriverWords = 0L)
+      val d = DriverGate.distributedOnly(
+        Bpe.train(tiny, numMerges = 10, minPairCount = min))
       assert(f == d, s"min=$min: $f != $d")
     }
   }
@@ -269,8 +269,8 @@ class ScaleSafetySpec extends GraftSpec {
         r.getDouble(3))).toSet
     for (rounds <- Seq(1, 5); topK <- Seq(2, 10)) {
       val fast = keyed(TextRank.keywords(docs, rounds, topK))
-      val dist = keyed(TextRank.keywords(docs, rounds, topK,
-        maxDriverPairs = 0L))
+      val dist = DriverGate.distributedOnly(
+        keyed(TextRank.keywords(docs, rounds, topK)))
       assert(fast == dist, s"rounds=$rounds topK=$topK")
       assert(fast.nonEmpty)
     }
@@ -278,7 +278,7 @@ class ScaleSafetySpec extends GraftSpec {
     // cut is decided by the (r desc, w asc) word tie-break
     val ring = Seq((7L, "a b c d e a"), (8L, "z y x z")).toDF("doc_id", "text")
     val f = keyed(TextRank.keywords(ring, 3, 3))
-    val d = keyed(TextRank.keywords(ring, 3, 3, maxDriverPairs = 0L))
+    val d = DriverGate.distributedOnly(keyed(TextRank.keywords(ring, 3, 3)))
     assert(f == d, s"$f != $d")
   }
 
@@ -454,8 +454,8 @@ class ScaleSafetySpec extends GraftSpec {
     // labels (budget applies to the DISTRIBUTED loop; the driver
     // union-find below the edge-count gate is exact with no rounds)
     intercept[IllegalStateException] {
-      Dedup.duplicateClusters(pairs, maxRounds = 2, maxDriverEdges = 0)
-        .collect()
+      DriverGate.distributedOnly(
+        Dedup.duplicateClusters(pairs, maxRounds = 2).collect())
     }
   }
 
